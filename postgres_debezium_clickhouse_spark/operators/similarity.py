@@ -1087,13 +1087,27 @@ def ivfpq_rerank_topk(
     shortlist pass can hand it in and skip the internal one — it must be
     exactly ``ivfpq_adc_topk(..., k=shortlist)`` over the same inputs
     (the rerank-recall query shares one materialized shortlist between
-    its adc and rerank branches this way)."""
+    its adc and rerank branches this way); a frame missing any of its
+    (query id, ``neighbor_id``, ``adc_d2``) columns raises ValueError,
+    checked on the schema alone."""
     from pyspark.sql import Window
 
-    short = shortlist_df if shortlist_df is not None else ivfpq_adc_topk(
-        queries, encoded, coarse, books, k=shortlist, m=m, ks=ks, dim=dim,
-        n_probe=n_probe, id_col=id_col, query_id_col=query_id_col,
-    )
+    if shortlist_df is None:
+        short = ivfpq_adc_topk(
+            queries, encoded, coarse, books, k=shortlist, m=m, ks=ks, dim=dim,
+            n_probe=n_probe, id_col=id_col, query_id_col=query_id_col,
+        )
+    else:
+        missing = [
+            c for c in (query_id_col, "neighbor_id", "adc_d2")
+            if c not in shortlist_df.columns
+        ]
+        if missing:
+            raise ValueError(
+                f"shortlist_df lacks column(s) {missing}: it must be "
+                f"ivfpq_adc_topk(..., k=shortlist) output, got {shortlist_df.columns}"
+            )
+        short = shortlist_df
     vecs = as_double_vec(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")
     )

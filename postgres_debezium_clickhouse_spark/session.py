@@ -48,6 +48,18 @@ _MIN_PARTITION_SIZE = "65536b"
 #: combining of genuinely tiny files — one task per 256 KB file is fine.
 _OPEN_COST = "262144b"
 
+#: Path count above which Spark lists input paths with a distributed job
+#: instead of on the driver (default 32).  A silver store's manifest names
+#: its live files exactly, one per bucket -- 64 under the default bucket
+#: count -- so every store read and every commit's touched-bucket read
+#: started a 64-task job just to stat files the manifest already names:
+#: 0.34-0.45 s of a 3.3-3.9 s commit on local[4] (4-vCPU x86 VM).  Building
+#: a read of those 64 files takes ~0.7 s with the job and ~0.1 s with the
+#: listing on the driver there.  Twice the default bucket count keeps such
+#: reads on the driver; a store with hundreds of buckets gets the
+#: distributed listing back, where many object-store stats run in parallel.
+_LISTING_THRESHOLD = "128"
+
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Set the runtime-settable confs the engine's semantics depend on, for
@@ -64,6 +76,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", _MIN_PARTITION_SIZE)
     spark.conf.set("spark.sql.files.openCostInBytes", _OPEN_COST)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", _LISTING_THRESHOLD)
     # cached plans must stay AQE-coalescible (see get_spark) — without it a
     # foreign session with a high initialPartitionNum pays uncoalesced
     # shuffles under every persist() in the foreachBatch merges
@@ -106,6 +119,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", _MIN_PARTITION_SIZE)
         .config("spark.sql.files.openCostInBytes", _OPEN_COST)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", _LISTING_THRESHOLD)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         # Let AQE coalesce CACHED plans too (default false): with the
         # scale-tuned initialPartitionNum=2048, a persist() upstream of a

@@ -27,7 +27,12 @@ the merge *computation* via ``apply_cdc(changed_keys_only=True)`` and the
 merge *write I/O* via the hash-bucketed store — only buckets whose keys
 appear in the batch are re-published; every other bucket's files are
 untouched (the write-side analogue of ReplacingMergeTree merging only
-affected parts, basic_example/clickhouse.sql:51).
+affected parts, basic_example/clickhouse.sql:51).  The bucket count sets
+the file layout, not the per-commit task count: a publish writes with
+``min(n_buckets, defaultParallelism)`` tasks (whole buckets per task), and
+the manifest's exact file list is statted on the driver
+(session.py ``_LISTING_THRESHOLD``), so a commit's fixed cost follows
+the cluster's task slots.
 
 Silver store layout (manifest-committed, bucketed)::
 
@@ -113,9 +118,11 @@ from .commit import (  # noqa: E402  (re-exported: the store's public commit API
 )
 
 #: default number of hash buckets for a new silver store.  Per-trigger
-#: write I/O is O(touched buckets); at 100 TB raise this so a single
-#: bucket stays executor-sized (the value is recorded in the manifest at
-#: store creation, so readers/writers never depend on the default).
+#: write I/O is O(touched buckets), one file per touched bucket; at 100 TB
+#: raise this so a single bucket stays executor-sized (the value is
+#: recorded in the manifest at store creation, so readers/writers never
+#: depend on the default).  It does not set the write's task count —
+#: ``_publish_buckets`` caps that at the cluster's task slots.
 DEFAULT_SILVER_BUCKETS = 64
 
 #: The active commit backend (manifest + epoch-claim control plane).
@@ -279,15 +286,22 @@ def _publish_buckets(
         # leftovers (the recheck would have failed).
         if os.path.isdir(epoch_dir):
             shutil.rmtree(epoch_dir)
+        # Write width = the cluster's task slots, capped at the bucket
+        # count.  One task per bucket made a 64-task write on 4 cores that
+        # took 1.4-1.8 s of a 3.3-3.9 s commit; with 4 tasks it takes
+        # 0.55-0.66 s (local[4], 4-vCPU x86 VM, ~3.9 k-event commits into
+        # a 15 k-row store).  Hash-partitioning __bucket still puts every
+        # bucket whole in one partition, and the (__bucket, keys) sort
+        # below makes each bucket one contiguous run there, so the writer
+        # still emits exactly one key-sorted file per touched bucket.  The
+        # width stays EXPLICIT: a bare repartition(col) starts at
+        # initialPartitionNum (2048 in the scale-tuned session) and AQE
+        # then sizes it by bytes (down to one task for a small batch); AQE
+        # never coalesces a numbered repartition.
+        width = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
         out = (
             df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-            # EXPLICIT width: a bare repartition(col) starts at AQE's
-            # initialPartitionNum (2048 in the scale-tuned session) and AQE
-            # never coalesces user repartitions — every publish was paying
-            # a 2048-task exchange regardless of store size (measured r8:
-            # the whole silver family, upsert/mutation/TTL/summing).  One
-            # partition per bucket is the store's natural write width.
-            .repartition(n_buckets, "__bucket")
+            .repartition(width, "__bucket")
             .sortWithinPartitions("__bucket", *keys)
         )
         # Write INTO the epoch dir, partitioned by __bucket ONLY (r9 fix,
@@ -361,7 +375,7 @@ def _publish_buckets(
                     shutil.rmtree(pepoch_dir)
                 pout = (
                     df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                    .repartition(n_buckets, "__bucket")
+                    .repartition(width, "__bucket")
                     .sortWithinPartitions("__bucket", *pspec["keys"])
                 )
                 pout.write.mode("append").options(**bloom_opts).partitionBy(

@@ -7,6 +7,7 @@ scale-oriented; tests only shrink parallelism for latency.
 
 from __future__ import annotations
 
+import itertools
 import tempfile
 
 import pytest
@@ -36,6 +37,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def jobs_started(spark, request):
+    """``jobs_started(fn) -> (fn(), n)``: ``n`` is the number of Spark jobs
+    ``fn`` started, counted in a job group of its own once the listener bus
+    has delivered every event to the status tracker."""
+    sc = spark.sparkContext
+    calls = itertools.count()
+
+    def run(fn):
+        group = f"{request.node.name}-{next(calls)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # ---------------------------------------------------------------------------

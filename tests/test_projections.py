@@ -135,12 +135,16 @@ def test_primary_bucket_files_key_sorted_by_contract(spark, tmp_path):
     then re-sorted by partition columns only, silently destroying the
     per-bucket key order on adversarially-ordered input.  Files must now
     be key-sorted BY CONTRACT (writer requirement satisfied by prefix,
-    no writer sort)."""
+    no writer sort).
+
+    The write runs min(n_buckets, defaultParallelism) tasks, so with 16
+    buckets on the local[4] session each task writes several buckets:
+    every touched bucket must still get exactly one file, in the primary
+    write and in the projection write alike."""
     import os
 
     import pyarrow.parquet as pq
 
-    path = str(tmp_path / "store")
     df = (
         spark.createDataFrame(
             [(i, f"v{i}") for i in range(5000)], "k long, val string"
@@ -148,13 +152,30 @@ def test_primary_bucket_files_key_sorted_by_contract(spark, tmp_path):
         .orderBy(F.rand(7))  # adversarial upstream order
         .withColumn("__deleted", F.lit(False))
     )
-    pl._publish_buckets(
-        df, path, ["k"], {"version": 0, "n_buckets": 4, "files": []}, set(range(4))
-    )
-    m = pl._read_manifest(path)
-    for rel in m["files"]:
-        ks = pq.ParquetFile(os.path.join(path, rel)).read(columns=["k"])["k"].to_pylist()
-        assert ks == sorted(ks), f"bucket file {rel} lost key order"
+
+    def assert_one_sorted_file_per_bucket(path, files, n_buckets, col):
+        buckets = [int(f.split("__bucket=")[1].split("/")[0]) for f in files]
+        # 5000 keys touch every bucket
+        assert sorted(buckets) == list(range(n_buckets)), files
+        for rel in files:
+            vs = pq.ParquetFile(os.path.join(path, rel)).read(columns=[col])[col].to_pylist()
+            assert vs == sorted(vs), f"bucket file {rel} lost {col} order"
+
+    assert spark.sparkContext.defaultParallelism < 16
+    for n_buckets in (4, 16):
+        path = str(tmp_path / f"store{n_buckets}")
+        pl._publish_buckets(
+            df, path, ["k"], {"version": 0, "n_buckets": n_buckets, "files": []},
+            set(range(n_buckets)),
+        )
+        m = pl._read_manifest(path)
+        assert_one_sorted_file_per_bucket(path, m["files"], n_buckets, "k")
+        pl.add_projection(spark, path, ["k"], "by_val", ["val"])
+        m = pl._read_manifest(path)
+        assert_one_sorted_file_per_bucket(path, m["files"], n_buckets, "k")
+        assert_one_sorted_file_per_bucket(
+            path, m["projections"]["by_val"]["files"], n_buckets, "val"
+        )
 
 
 def test_compaction_preserves_projections(spark, tmp_path):

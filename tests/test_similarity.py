@@ -644,6 +644,33 @@ def test_ivfpq_rerank_superset_optimality_and_recall(spark):
     assert adc_hits < rr_hits                    # the refine stage's value
 
 
+def test_ivfpq_rerank_rejects_malformed_shortlist(spark, jobs_started):
+    """A hand-made ``shortlist_df`` without the ADC pass's columns is
+    refused from its schema alone, before any Spark job runs."""
+    import pytest as _pytest
+
+    from postgres_debezium_clickhouse_spark.operators.similarity import (
+        ivfpq_rerank_topk,
+    )
+
+    docs = _pq_fixture(spark, n=8)
+    short = spark.createDataFrame(
+        [(0, 5, 1.0)], "query_id long, neighbor_id long, adc_d2 double"
+    )
+    for bad, missing in (
+        (short.drop("adc_d2"), "adc_d2"),
+        (short.withColumnRenamed("neighbor_id", "vec_id"), "neighbor_id"),
+        (short.drop("query_id"), "query_id"),
+    ):
+        def call():
+            with _pytest.raises(ValueError, match=missing):
+                ivfpq_rerank_topk(docs, docs, docs, docs, docs,
+                                  k=1, m=4, ks=8, dim=16, shortlist_df=bad)
+
+        _, n_jobs = jobs_started(call)
+        assert n_jobs == 0
+
+
 def test_l2_topk_matches_bruteforce(spark):
     from postgres_debezium_clickhouse_spark.operators.similarity import l2_topk
 
